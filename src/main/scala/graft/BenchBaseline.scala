@@ -8,12 +8,12 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.ReferenceWorkloads
 
-/** Head-to-head against BASELINE.md's published numbers, on the reference's
-  * OWN fixture data at the reference's OWN report scale and fairness config
-  * (`Reports/MP4_Report.pdf` p.2: batch size 100, 3 tasks per stage;
-  * Lichess input 100,000 lines, Parking 20,000):
+/** Head-to-head against BASELINE.md's published numbers, on fixtures shaped
+  * like the reference's own, at the reference's OWN report scale and
+  * fairness config (`Reports/MP4_Report.pdf` p.2: batch size 100, 3 tasks
+  * per stage; Lichess input 100,000 lines, Parking 20,000):
   *
-  *  - inputs are the reference fixtures replicated to the report's line
+  *  - inputs are the fixtures replicated to the report's line
   *    counts and laid out as 100-line files, so one micro-batch == one
   *    100-record admission unit, exactly the report's batching;
   *  - the session runs `local[3]` with 3 shuffle partitions — the report's
@@ -27,6 +27,11 @@ import graft.operators.ReferenceWorkloads
   * `sbt "runMain graft.BenchBaseline"` → BASELINE_COMPARE.md.
   */
 object BenchBaseline {
+
+  /** Fixtures shaped like the reference's Lichess and Parking files
+    * (`tools/gen_reference_fixtures.py`); run from the repository root.
+    */
+  private val Fixtures = "src/test/resources/reference"
 
   private def replicateToFiles(src: String, targetLines: Int, outDir: String): Int = {
     val raw = Files.readAllBytes(Paths.get(src))
@@ -68,8 +73,8 @@ object BenchBaseline {
 
     val lichessDir = "/tmp/baseline_lichess"
     val parkingDir = "/tmp/baseline_parking"
-    val nL = replicateToFiles("/root/reference/HYDFS/business/Lichess.txt", 100000, lichessDir)
-    val nP = replicateToFiles("/root/reference/HYDFS/business/Parking_Meter_Spaces.txt", 20000, parkingDir)
+    val nL = replicateToFiles(s"$Fixtures/lichess.txt", 100000, lichessDir)
+    val nP = replicateToFiles(s"$Fixtures/parking_meters.txt", 20000, parkingDir)
 
     def streamSecs(dir: String, pipe: DataFrame => DataFrame): Double = {
       val ckpt = Files.createTempDirectory("blckpt").toString

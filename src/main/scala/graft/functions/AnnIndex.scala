@@ -16,7 +16,11 @@ import graft.functions.Layout.LineageOps
   * scale) plus the probed cells' code rows.
   *
   * Artifact layout under `indexPath` (all via the [[Storage]] facade):
-  *   - `meta`      — one row: (dim, n_cells, m, ksub, iters)
+  *   - `manifest`  — the [[Storage.commit]] record: the model shape (`dim`,
+  *                   `n_cells`, `m`, `ksub`, `iters`) and the committed
+  *                   code-row count `n_codes`. Every verb reads it first
+  *                   (refusing a torn or missing index), invalidates it,
+  *                   rewrites tables, and commits it LAST.
   *   - `centroids` — (cell BIGINT, cv ARRAY<BIGINT>): coarse cell centroids
   *   - `codebooks` — (sub INT, code BIGINT, cv ARRAY<BIGINT>): per-subvector
   *                   PQ codebooks over cell RESIDUALS
@@ -32,43 +36,17 @@ import graft.functions.Layout.LineageOps
   */
 object AnnIndex {
 
-  final case class IvfPqMeta(dim: Int, nCells: Int, m: Int, ksub: Int, iters: Int)
-
-  private def metaPath(p: String)      = s"$p/meta"
-  private def centroidsPath(p: String) = s"$p/centroids"
-  private def codebooksPath(p: String) = s"$p/codebooks"
-  private def codesPath(p: String)     = s"$p/codes"
-  private def manifestPath(p: String)  = s"$p/manifest"
-
-  /** Commit the build transaction: the manifest is written LAST (and
-    * dropped FIRST by builders/appenders), so its presence certifies every
-    * artifact table is complete — the probe-side torn-index guard.
-    *
-    * `nCodes` is supplied by the caller (an [[org.apache.spark.sql
-    * .Observation]] riding the codes write, or the prior manifest when the
+  /** `n_codes` in the commit record comes from an [[org.apache.spark.sql
+    * .Observation]] riding the codes write (or the prior record when the
     * codes table is untouched) instead of a full re-count of the codes
-    * artifact — the certificate is the manifest's PRESENCE; the count is
-    * metadata, and the observed write-side count equals the written rows by
-    * definition (a failed write never reaches this call). Guide §1.2: the
-    * re-count was one extra job per lifecycle verb.
+    * artifact: the observed write-side count equals the written rows by
+    * definition (a failed write never reaches the commit).
     */
-  private def commit(spark: SparkSession, indexPath: String, nCodes: Long): Unit = {
-    import spark.implicits._
-    Storage.replace(Seq(nCodes).toDF("n_codes"), manifestPath(indexPath))
-  }
-
   private def observedCount(df: DataFrame): (DataFrame, () => Long) = {
     val obs = new org.apache.spark.sql.Observation()
     (df.observe(obs, count(lit(1)).as("n")),
       () => obs.get("n").asInstanceOf[Long])
   }
-
-  private def manifestCodes(spark: SparkSession, indexPath: String): Long =
-    Storage.get(spark, manifestPath(indexPath)).head().getAs[Long]("n_codes")
-
-  private def requireCommitted(indexPath: String): Unit =
-    require(Storage.exists(manifestPath(indexPath)),
-      s"index at $indexPath has no commit manifest — torn or missing build; rebuild it")
 
   private def qv(c: Column): Column = transform(c, x => floor(x.cast("double") * lit(1e6)))
 
@@ -78,12 +56,11 @@ object AnnIndex {
     * corpus) and [[appendIvfPq]] (over new rows, no retrain).
     */
   private def encode(
-      vecs: DataFrame, idCol: String, vecCol: String,
-      meta: IvfPqMeta,
+      vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
       coarse: Array[(Long, Array[Long])],
       subModels: Seq[Array[(Long, Array[Long])]]
   ): DataFrame = {
-    val dsub      = meta.dim / meta.m
+    val dsub      = dim / subModels.size
     val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
     val withRes = vecs
       .select(col(idCol).cast("long").as("id"), qv(col(vecCol)).as("__qv"))
@@ -115,7 +92,7 @@ object AnnIndex {
     val spark = corpus.sparkSession
     import spark.implicits._
     val dsub = dim / m
-    Storage.drop(manifestPath(indexPath)) // invalidate before touching tables
+    Storage.invalidate(indexPath)
     Storage.drop(s"$indexPath/tombstones") // rebuild resets delete state
 
     val coarse    = ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters)
@@ -143,38 +120,33 @@ object AnnIndex {
     val codes = withRes.select(col("__id").as("id"), col("cell"), array(codeCols: _*).as("codes"))
 
     Storage.replace(
-      Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"),
-      metaPath(indexPath))
-    Storage.replace(
       coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
-      centroidsPath(indexPath))
+      s"$indexPath/centroids")
     Storage.replace(
       subModels.zipWithIndex.flatMap { case (mod, s) =>
         mod.map { case (code, cv) => (s, code, cv.toSeq) }
       }.toDF("sub", "code", "cv"),
-      codebooksPath(indexPath))
+      s"$indexPath/codebooks")
     val (codesObs, nCodes) = observedCount(codes)
-    Storage.replace(codesObs, codesPath(indexPath))
-    commit(spark, indexPath, nCodes())
+    Storage.replace(codesObs, s"$indexPath/codes")
+    Storage.commit(indexPath, Map("dim" -> dim.toLong, "n_cells" -> nCells.toLong,
+      "m" -> m.toLong, "ksub" -> ksub.toLong, "iters" -> iters.toLong, "n_codes" -> nCodes()))
   }
 
-  private def readMeta(spark: SparkSession, indexPath: String): IvfPqMeta = {
-    val r = Storage.get(spark, metaPath(indexPath)).head()
-    IvfPqMeta(r.getAs[Int]("dim"), r.getAs[Int]("n_cells"), r.getAs[Int]("m"),
-      r.getAs[Int]("ksub"), r.getAs[Int]("iters"))
-  }
-
+  /** The frozen model: coarse centroids by cell, and the `m` (from the
+    * commit record) sub-codebooks by code.
+    */
   private def readModels(
-      spark: SparkSession, indexPath: String, meta: IvfPqMeta
+      spark: SparkSession, indexPath: String, rec: Map[String, Long]
   ): (Array[(Long, Array[Long])], Seq[Array[(Long, Array[Long])]]) = {
-    val coarse = Storage.get(spark, centroidsPath(indexPath))
+    val coarse = Storage.get(spark, s"$indexPath/centroids")
       .collect()
       .map(r => (r.getAs[Long]("cell"), r.getAs[Seq[Long]]("cv").toArray))
       .sortBy(_._1)
-    val cbRows = Storage.get(spark, codebooksPath(indexPath))
+    val cbRows = Storage.get(spark, s"$indexPath/codebooks")
       .collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("code"), r.getAs[Seq[Long]]("cv").toArray))
-    val subModels = (0 until meta.m).map { s =>
+    val subModels = (0 until rec("m").toInt).map { s =>
       cbRows.filter(_._1 == s).map(t => (t._2, t._3)).sortBy(_._1)
     }
     (coarse, subModels)
@@ -195,12 +167,10 @@ object AnnIndex {
     */
   def deleteVecs(spark: SparkSession, indexPath: String, vecIds: DataFrame): Unit = {
     import spark.implicits._
-    requireCommitted(indexPath)
-    // tombstoning never touches the codes table, so the manifest count is
-    // carried over from the prior manifest (1-row read) instead of a full
-    // codes re-count job.
-    val nCodes = manifestCodes(spark, indexPath)
-    Storage.drop(manifestPath(indexPath))
+    // tombstoning never touches the codes table: the record is re-committed
+    // unchanged
+    val rec = Storage.committed(indexPath, "IVF-PQ index")
+    Storage.invalidate(indexPath)
     val ids = vecIds.select(col(vecIds.columns.head).cast("long").as("id"))
       .distinct().truncateLineage()
     val prior =
@@ -209,11 +179,11 @@ object AnnIndex {
       else Seq.empty[Long].toDF("id")
     Storage.replace(prior.union(ids).distinct().truncateLineage(),
       s"$indexPath/tombstones")
-    commit(spark, indexPath, nCodes)
+    Storage.commit(indexPath, rec)
   }
 
   private def liveCodes(spark: SparkSession, indexPath: String): DataFrame = {
-    val codes = Storage.get(spark, codesPath(indexPath))
+    val codes = Storage.get(spark, s"$indexPath/codes")
     if (Storage.exists(s"$indexPath/tombstones"))
       codes.join(broadcast(Storage.get(spark, s"$indexPath/tombstones")), Seq("id"), "left_anti")
     else codes
@@ -224,9 +194,8 @@ object AnnIndex {
       idCol: String, vecCol: String, nProbe: Int, k: Int
   ): DataFrame = {
     import spark.implicits._
-    requireCommitted(indexPath)
-    val meta                = readMeta(spark, indexPath)
-    val (coarse, subModels) = readModels(spark, indexPath, meta)
+    val (coarse, subModels) =
+      readModels(spark, indexPath, Storage.committed(indexPath, "IVF-PQ index"))
     val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
 
     val reconRes = concat(subModels.zipWithIndex.map { case (mod, s) =>
@@ -274,9 +243,8 @@ object AnnIndex {
       idCol: String, vecCol: String, tsCol: String, nProbe: Int, k: Int,
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
-    requireCommitted(indexPath)
-    val meta                = readMeta(spark, indexPath)
-    val (coarse, subModels) = readModels(spark, indexPath, meta)
+    val (coarse, subModels) =
+      readModels(spark, indexPath, Storage.committed(indexPath, "IVF-PQ index"))
     val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
     val reconRes = concat(subModels.zipWithIndex.map { case (mod, s) =>
       element_at(
@@ -324,34 +292,34 @@ object AnnIndex {
     * rewrite of the codes table under the [[graft.sources.Storage.rewrite]]
     * rename-aside swap; model tables are untouched. Runs as the usual
     * invalidate → rewrite → re-commit transaction (crash mid-compaction
-    * leaves a manifest-less index that probes refuse). After compaction
-    * probes pay no anti-join and previously deleted ids may be re-appended.
+    * leaves an index without a commit record, which every verb refuses).
+    * After compaction probes pay no anti-join and previously deleted ids may
+    * be re-appended.
     *
     * Returns false when there is nothing to compact or the tombstone
     * fraction of the codes table is below `minFraction` (the rewrite is a
     * full codes pass — gate it on accumulated delete volume).
     */
   def compactIvfPq(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean = {
-    requireCommitted(indexPath)
+    val rec = Storage.committed(indexPath, "IVF-PQ index")
     if (!Storage.exists(s"$indexPath/tombstones")) return false
     val tomb   = Storage.get(spark, s"$indexPath/tombstones").truncateLineage()
     val nTomb  = tomb.count()
-    // gate denominator from the manifest's 1-row count, not a full codes
-    // scan: build/append commit the OBSERVED written-row count and delete
-    // leaves codes untouched, so manifest n_codes == physical codes rows by
-    // construction (the r17 observed-count discipline applied to the gate).
-    val nCodes = manifestCodes(spark, indexPath)
+    // gate denominator from the record's count, not a full codes scan:
+    // build/append commit the OBSERVED written-row count and delete leaves
+    // codes untouched, so n_codes == physical codes rows by construction.
+    val nCodes = rec("n_codes")
     if (nTomb == 0L || (nCodes > 0L && nTomb.toDouble / nCodes.toDouble < minFraction)) return false
-    Storage.drop(manifestPath(indexPath))
+    Storage.invalidate(indexPath)
     val (liveObs, nLive) = observedCount(
       // no broadcast hint: tombstones accumulate until exactly this moment,
       // so a long-deferred compaction may hold far more than a broadcastable
       // side — let the planner size the join (r14 advice, same class as the
       // probeIvfPqStream codes broadcast removed in r13).
-      Storage.get(spark, codesPath(indexPath)).join(tomb, Seq("id"), "left_anti"))
-    Storage.rewrite(liveObs, codesPath(indexPath))
+      Storage.get(spark, s"$indexPath/codes").join(tomb, Seq("id"), "left_anti"))
+    Storage.rewrite(liveObs, s"$indexPath/codes")
     Storage.drop(s"$indexPath/tombstones")
-    commit(spark, indexPath, nLive())
+    Storage.commit(indexPath, rec + ("n_codes" -> nLive()))
     true
   }
 
@@ -367,7 +335,7 @@ object AnnIndex {
       spark: SparkSession, indexPath: String, newVecs: DataFrame,
       idCol: String, vecCol: String
   ): DataFrame = {
-    requireCommitted(indexPath)
+    val rec = Storage.committed(indexPath, "IVF-PQ index")
     // codes rows are unique by id; a tombstoned id still has its old code
     // row physically present, so re-appending it would either stay invisible
     // (anti-joined forever) or duplicate — refuse; compact first.
@@ -379,18 +347,16 @@ object AnnIndex {
         s"$clash appended vector id(s) are tombstoned in $indexPath — compact " +
           "the index before re-adding a deleted vector")
     }
-    val meta                = readMeta(spark, indexPath)
-    val (coarse, subModels) = readModels(spark, indexPath, meta)
-    val appended = encode(newVecs, idCol, vecCol, meta, coarse, subModels)
+    val (coarse, subModels) = readModels(spark, indexPath, rec)
+    val appended = encode(newVecs, idCol, vecCol, rec("dim").toInt, coarse, subModels)
     // append is its own transaction: invalidate, extend codes, re-commit —
-    // a crash mid-append leaves a manifest-less index that probes refuse.
-    // The new total = prior manifest count + the appended rows observed on
-    // the write itself; no post-append codes re-count job.
-    val nOld = manifestCodes(spark, indexPath)
-    Storage.drop(manifestPath(indexPath))
+    // a crash mid-append leaves an index without a commit record, which
+    // every verb refuses. The new total = prior count + the appended rows
+    // observed on the write itself; no post-append codes re-count job.
+    Storage.invalidate(indexPath)
     val (appObs, nApp) = observedCount(appended)
-    Storage.append(appObs, codesPath(indexPath))
-    commit(spark, indexPath, nOld + nApp())
+    Storage.append(appObs, s"$indexPath/codes")
+    Storage.commit(indexPath, rec + ("n_codes" -> (rec("n_codes") + nApp())))
     appended
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Layout.LineageOps
 
@@ -10,10 +10,17 @@ import graft.functions.Layout.LineageOps
   * BUCKET so a probe prunes to its terms' bucket directories — directory-
   * level data skipping, the 100 TB serving shape), and
   * [[probeBm25]] scores strictly FROM THE PERSISTED TABLES — no corpus scan,
-  * no re-tokenization, model scalars (n_docs, avgdl) read from the one-row
-  * corpus table written at build time so every probe — and the DuckDB oracle
-  * replaying it over `read_parquet` of the same artifacts — sees bit-equal
-  * global statistics.
+  * no re-tokenization.
+  *
+  * Every verb is one [[graft.sources.Storage.commit]] transaction: it reads
+  * the commit record (refusing a torn or missing index), invalidates it,
+  * rewrites tables, and commits the record LAST. The record carries the
+  * exact integer corpus totals `n_docs`/`total_dl`, plus `live_n_docs`/
+  * `live_total_dl` while tombstones are pending; probes take avgdl from
+  * the same integer division ([[avgdl]]) that fills the one-row `corpus`
+  * and `live_corpus` tables, so every probe — and the DuckDB oracle
+  * replaying it over `read_parquet` of those tables — sees bit-equal global
+  * statistics.
   *
   * Scale: a probe touches |terms| posting BUCKETS + a doc-length join
   * keyed on doc_id; df/corpus stats are broadcast-sized. Appending a
@@ -23,8 +30,6 @@ import graft.functions.Layout.LineageOps
 object TextIndex {
 
   import graft.sources.Storage
-
-  private def manifestPath(p: String) = s"$p/manifest"
 
   /** Postings are hive-partitioned by `bucket = xxhash64(tok) mod 64`, NOT
     * by raw token: per-token directories are only viable on a closed
@@ -55,14 +60,49 @@ object TextIndex {
   private def readPostings(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.parquet(s"$indexPath/postings")
 
-  /** Tokenize once, write postings/docs/stats/corpus; commit-manifest last
-    * (dropped first), so probes refuse a torn build — the same transaction
-    * discipline as [[AnnIndex]].
+  /** Mean document length from the exact integer totals — the one division
+    * every probe and every `corpus`/`live_corpus` row uses. An empty corpus
+    * gives 0.0, not NaN.
+    */
+  private def avgdl(nDocs: Long, totalDl: Long): Double =
+    if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble
+
+  /** One-row (n_docs, total_dl, avgdl) table: the corpus statistics the
+    * DuckDB oracles read beside the postings.
+    */
+  private def writeCorpus(spark: SparkSession, nDocs: Long, totalDl: Long, path: String): Unit = {
+    import spark.implicits._
+    Storage.replace(
+      Seq((nDocs, totalDl, avgdl(nDocs, totalDl))).toDF("n_docs", "total_dl", "avgdl"), path)
+  }
+
+  /** Totals of the undeleted documents: the live fields while tombstones
+    * are pending, else the corpus totals.
+    */
+  private def liveTotals(rec: Map[String, Long]): (Long, Long) =
+    (rec.getOrElse("live_n_docs", rec("n_docs")), rec.getOrElse("live_total_dl", rec("total_dl")))
+
+  /** Per-(doc, term) BM25 contribution over `tf`, `df` and `dl` columns,
+    * quantized to 1e-6 (the TREC-3 formulation of [[QualityLM.bm25TopK]]).
+    * It depends on the query only through which postings it is applied to,
+    * so every probe shape sums the same column.
+    */
+  private def bm25Sq(nDocs: Long, totalDl: Long, k1: Double, b: Double): Column =
+    floor(
+      log((lit(nDocs.toDouble) - col("df").cast("double") + 0.5) /
+            (col("df").cast("double") + 0.5) + 1.0) *
+        (col("tf").cast("double") * (k1 + 1.0)) /
+        (col("tf").cast("double") + lit(k1) *
+          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl(nDocs, totalDl)))) *
+        1e6 + 0.5
+    ).cast("long")
+
+  /** Tokenize once, write postings/docs/stats/corpus, then commit the
+    * corpus totals.
     */
   def build(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    Storage.drop(manifestPath(indexPath))
+    Storage.invalidate(indexPath)
     // a rebuild resets delete state — stale tombstones/live stats from a
     // prior generation would corrupt the fresh index's corrections
     Storage.drop(s"$indexPath/tombstones")
@@ -93,10 +133,9 @@ object TextIndex {
     val post = readPostings(spark, indexPath)
     // corpus totals ride the docs write as an Observation (exact integer
     // count/sum merged from the write's own tasks) — the corpus row and the
-    // manifest count then derive driver-side with zero extra scans, where
-    // the old path re-read the docs table twice (corpus agg + manifest
-    // count). Same values by definition: the observed aggregates run over
-    // exactly the rows the write persists.
+    // commit record then derive driver-side with zero extra scans. Same
+    // values by definition: the observed aggregates run over exactly the
+    // rows the write persists.
     val obs = new org.apache.spark.sql.Observation()
     post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       .observe(obs, count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
@@ -105,20 +144,13 @@ object TextIndex {
     val totalDl = obs.get("total_dl").asInstanceOf[Long]
     post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$indexPath/stats")
-    // corpus stats carry the exact integer totals so the append path can
-    // re-derive the identical avgdl double (same sum/count division).
-    // nDocs == 0 guard (r17 advice): an empty corpus would otherwise write
-    // avgdl = NaN where the pre-r17 aggregate path produced a well-defined
-    // 0-docs row — keep the artifact shape stable for empty builds.
-    Seq((nDocs, totalDl, if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble))
-      .toDF("n_docs", "total_dl", "avgdl")
-      .write.mode("overwrite").parquet(s"$indexPath/corpus")
-    Storage.replace(Seq(nDocs).toDF("n_docs"), manifestPath(indexPath))
+    writeCorpus(spark, nDocs, totalDl, s"$indexPath/corpus")
+    Storage.commit(indexPath, Map("n_docs" -> nDocs, "total_dl" -> totalDl))
   }
 
   /** Delete documents from the persisted index by TOMBSTONE — the lakehouse
     * delete pattern applied to serving: no posting is rewritten; a
-    * tombstone table records the deleted ids and the corpus row subtracts
+    * tombstone table records the deleted ids and the live totals subtract
     * their exact integer totals (doc count, total length, computed from the
     * index's own docs table — O(delta)). Probes anti-join the broadcast
     * tombstone set and correct per-term df by counting tombstoned postings
@@ -132,9 +164,8 @@ object TextIndex {
     */
   def deleteDocs(spark: SparkSession, indexPath: String, docIds: DataFrame): Unit = {
     import spark.implicits._
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    Storage.drop(manifestPath(indexPath))
+    val rec = Storage.committed(indexPath, "text index")
+    Storage.invalidate(indexPath)
     // ids is consumed exactly once (the `fresh` anti-join below, which is
     // itself checkpointed before the tombstone overwrite) — checkpointing it
     // too was one pure-overhead materialization job per delete.
@@ -151,29 +182,23 @@ object TextIndex {
     val dead = spark.read.parquet(s"$indexPath/docs")
       .join(broadcast(fresh), Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
-    val prev = spark.read.parquet(
-      if (Storage.exists(s"$indexPath/live_corpus")) s"$indexPath/live_corpus"
-      else s"$indexPath/corpus")
-      .select(col("n_docs"), col("total_dl")).head()
-    val n = prev.getAs[Long]("n_docs") - dead.getAs[Long]("n")
-    val t = prev.getAs[Long]("total_dl") - dead.getAs[Long]("t")
-    Storage.replace(
-      Seq((n, t, t.toDouble / n.toDouble)).toDF("n_docs", "total_dl", "avgdl"),
-      s"$indexPath/live_corpus")
-    Storage.replace(Seq(n).toDF("n_docs"), manifestPath(indexPath))
+    val (liveN, liveT) = liveTotals(rec)
+    val n = liveN - dead.getAs[Long]("n")
+    val t = liveT - dead.getAs[Long]("t")
+    writeCorpus(spark, n, t, s"$indexPath/live_corpus")
+    Storage.commit(indexPath, rec ++ Map("live_n_docs" -> n, "live_total_dl" -> t))
   }
 
   /** Tombstone-aware BM25 probe: live postings/doc-lengths via anti-join on
     * the broadcast tombstone set, per-term df corrected by the tombstoned
-    * posting counts of the probed terms, corpus scalars from the
-    * `live_corpus` row maintained at delete time.
+    * posting counts of the probed terms, corpus scalars from the live
+    * totals of the commit record.
     */
   def probeBm25Live(
       spark: SparkSession, indexPath: String, terms: Seq[String],
       topK: Int = 20, k1: Double = 1.2, b: Double = 0.75
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val (nDocs, totalDl) = liveTotals(Storage.committed(indexPath, "text index"))
     require(Storage.exists(s"$indexPath/tombstones"),
       s"no tombstones at $indexPath — use probeBm25 for an undeleted index")
     val tomb = spark.read.parquet(s"$indexPath/tombstones")
@@ -189,21 +214,10 @@ object TextIndex {
       .filter(col("tok").isin(terms: _*))
       .join(dfCorr, Seq("tok"), "left_outer")
       .select(col("tok"), (col("df") - coalesce(col("df_dead"), lit(0L))).as("df"))
-    val docs   = spark.read.parquet(s"$indexPath/docs")
-    val corpus = spark.read.parquet(s"$indexPath/live_corpus")
-    val sq = floor(
-      log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))) *
-        1e6 + 0.5
-    ).cast("long")
     postings
       .join(broadcast(stats), "tok")
-      .join(docs, "doc_id")
-      .crossJoin(broadcast(corpus))
-      .select(col("doc_id"), sq.as("sq"))
+      .join(spark.read.parquet(s"$indexPath/docs"), "doc_id")
+      .select(col("doc_id"), bm25Sq(nDocs, totalDl, k1, b).as("sq"))
       .groupBy(col("doc_id"))
       .agg(sum(col("sq")).as("score"))
       .orderBy(desc("score"), col("doc_id"))
@@ -222,29 +236,16 @@ object TextIndex {
       spark: SparkSession, indexPath: String, queries: DataFrame,
       topK: Int = 10, k1: Double = 1.2, b: Double = 0.75
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val rec = Storage.committed(indexPath, "text index")
     require(!Storage.exists(s"$indexPath/tombstones"),
       s"text index at $indexPath has tombstoned docs — compact it, or probe " +
         "single queries via probeBm25Live")
-    val postings = readPostings(spark, indexPath)
-    val stats    = spark.read.parquet(s"$indexPath/stats")
-    val docs     = spark.read.parquet(s"$indexPath/docs")
-    val corpus   = spark.read.parquet(s"$indexPath/corpus")
-    val sq = floor(
-      log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))) *
-        1e6 + 0.5
-    ).cast("long")
-    val scored = postings
+    val scored = readPostings(spark, indexPath)
       .join(broadcast(queries.select(col("query_id"), col("tok"))), "tok")
-      .join(broadcast(stats), "tok")
-      .join(docs, "doc_id")
-      .crossJoin(broadcast(corpus))
-      .select(col("query_id"), col("doc_id"), sq.as("sq"))
+      .join(broadcast(spark.read.parquet(s"$indexPath/stats")), "tok")
+      .join(spark.read.parquet(s"$indexPath/docs"), "doc_id")
+      .select(col("query_id"), col("doc_id"),
+        bm25Sq(rec("n_docs"), rec("total_dl"), k1, b).as("sq"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("sq")).as("score"))
     scored
@@ -260,7 +261,7 @@ object TextIndex {
     * (query_id, tok, ts) rows is answered against the persisted postings.
     * The per-(doc, term) quantized BM25 contribution `sq` is QUERY-
     * INDEPENDENT, so the static side precomputes one (tok, doc_id, sq)
-    * frame from the artifact tables (corpus scalars read once, driver-side);
+    * frame from the artifact tables (corpus scalars from the commit record);
     * each micro-batch's terms stream-static join it on `tok` — when the
     * planner broadcasts the per-batch term set, dynamic partition pruning
     * skips the unmatched posting directories, the same data-skipping the
@@ -278,25 +279,13 @@ object TextIndex {
       topK: Int = 10, k1: Double = 1.2, b: Double = 0.75,
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val rec = Storage.committed(indexPath, "text index")
     require(!Storage.exists(s"$indexPath/tombstones"),
       s"text index at $indexPath has tombstoned docs — compact it before streaming probes")
-    val corpus = spark.read.parquet(s"$indexPath/corpus").head()
-    val nDocs  = corpus.getAs[Long]("n_docs").toDouble
-    val avgdl  = corpus.getAs[Double]("avgdl")
-    val sq = floor(
-      log((lit(nDocs) - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl)) *
-        1e6 + 0.5
-    ).cast("long")
     val static = readPostings(spark, indexPath)
       .join(broadcast(spark.read.parquet(s"$indexPath/stats")), "tok")
       .join(spark.read.parquet(s"$indexPath/docs"), "doc_id")
-      .select(col("tok"), col("doc_id"), sq.as("sq"))
+      .select(col("tok"), col("doc_id"), bm25Sq(rec("n_docs"), rec("total_dl"), k1, b).as("sq"))
     val routed = queryStream
       .withWatermark(tsCol, watermark)
       .select(col(qidCol).cast("long").as("query_id"), col(tokCol).as("tok"), col(tsCol))
@@ -332,9 +321,7 @@ object TextIndex {
     */
   def append(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val rec = Storage.committed(indexPath, "text index")
     // re-adding a tombstoned id would resurrect its OLD postings (still
     // physically present) alongside the new ones — refuse; compact first.
     if (Storage.exists(s"$indexPath/tombstones")) {
@@ -345,7 +332,7 @@ object TextIndex {
         s"$clash appended doc id(s) are tombstoned in $indexPath — compact the " +
           "index before re-adding a deleted document")
     }
-    Storage.drop(manifestPath(indexPath))
+    Storage.invalidate(indexPath)
     val tok = docs.select(col(idCol).as("doc_id"),
       explode(TextAnalysis.tokens(col(textCol))).as("tok"))
     val newPost = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -369,28 +356,16 @@ object TextIndex {
         (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
       .truncateLineage()
     Storage.replace(mergedStats, s"$indexPath/stats")
-    val old = spark.read.parquet(s"$indexPath/corpus")
-      .select(col("n_docs"), col("total_dl")).head()
-    val deltaN  = dObs.get("n").asInstanceOf[Long]
-    val deltaT  = dObs.get("t").asInstanceOf[Long]
-    val nDocs   = old.getAs[Long]("n_docs") + deltaN
-    val totalDl = old.getAs[Long]("total_dl") + deltaT
-    Storage.replace(
-      Seq((nDocs, totalDl, totalDl.toDouble / nDocs.toDouble))
-        .toDF("n_docs", "total_dl", "avgdl"),
-      s"$indexPath/corpus")
-    // a deleted-then-appended index also tracks LIVE totals — without this
-    // the delta would be invisible to probeBm25Live (stale n_docs/avgdl)
-    if (Storage.exists(s"$indexPath/live_corpus")) {
-      val live = spark.read.parquet(s"$indexPath/live_corpus")
-        .select(col("n_docs"), col("total_dl")).head()
-      val ln = live.getAs[Long]("n_docs") + deltaN
-      val lt = live.getAs[Long]("total_dl") + deltaT
-      Storage.replace(
-        Seq((ln, lt, lt.toDouble / ln.toDouble)).toDF("n_docs", "total_dl", "avgdl"),
-        s"$indexPath/live_corpus")
-    }
-    Storage.replace(Seq(nDocs).toDF("n_docs"), manifestPath(indexPath))
+    val deltaN = dObs.get("n").asInstanceOf[Long]
+    val deltaT = dObs.get("t").asInstanceOf[Long]
+    // every total in the record grows by the delta — the live ones too on a
+    // deleted-then-appended index, or the delta would be invisible to
+    // probeBm25Live (stale n_docs/avgdl)
+    val next = rec.map { case (k, v) => k -> (v + (if (k.endsWith("n_docs")) deltaN else deltaT)) }
+    writeCorpus(spark, next("n_docs"), next("total_dl"), s"$indexPath/corpus")
+    if (next.contains("live_n_docs"))
+      writeCorpus(spark, next("live_n_docs"), next("live_total_dl"), s"$indexPath/live_corpus")
+    Storage.commit(indexPath, next)
   }
 
   /** COMPACT a tombstoned index: physically drop every deleted doc's
@@ -401,8 +376,8 @@ object TextIndex {
     * re-appended. The [[graft.sources.Storage.merge]] rename-aside swap
     * rewrites each table, and the whole compaction runs as the usual
     * invalidate → rewrite → re-commit transaction, so a crash mid-compaction
-    * leaves a manifest-less index that probes refuse rather than a torn mix
-    * of compacted and stale tables.
+    * leaves an index without a commit record, which every verb refuses,
+    * rather than a torn mix of compacted and stale tables.
     *
     * Returns false (no work) when there are no tombstones or their fraction
     * of the indexed corpus is below `minFraction` — the "compact when the
@@ -415,19 +390,17 @@ object TextIndex {
     * compact-then-probe == rebuild-without-deleted bit-exact.
     */
   def compact(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean = {
-    import spark.implicits._
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val rec = Storage.committed(indexPath, "text index")
     if (!Storage.exists(s"$indexPath/tombstones")) return false
     val tomb  = spark.read.parquet(s"$indexPath/tombstones").truncateLineage()
     val nTomb = tomb.count()
-    // gate denominator from the corpus row, not a full docs count: build
-    // writes the OBSERVED docs count, append adds its observed delta, and
-    // delete never touches the docs table — so corpus.n_docs == physical
-    // docs rows by construction (1-row read replaces a full-table job).
-    val nDocs = spark.read.parquet(s"$indexPath/corpus").head().getAs[Long]("n_docs")
+    // gate denominator from the commit record, not a full docs count: build
+    // commits the OBSERVED docs count, append adds its observed delta, and
+    // delete never touches the docs table — so n_docs == physical docs rows
+    // by construction.
+    val nDocs = rec("n_docs")
     if (nTomb == 0L || (nDocs > 0L && nTomb.toDouble / nDocs.toDouble < minFraction)) return false
-    Storage.drop(manifestPath(indexPath))
+    Storage.invalidate(indexPath)
     // no broadcast hints: compaction is where the FULL accumulated
     // tombstone set is joined — a long-deferred compaction can exceed the
     // broadcast limit; the planner auto-broadcasts when it fits (r14 advice).
@@ -448,16 +421,13 @@ object TextIndex {
     Storage.rewrite(
       readPostings(spark, indexPath).groupBy(col("tok")).agg(count(lit(1)).as("df")),
       s"$indexPath/stats")
-    // live_corpus already holds the exact post-delete integer totals (and
-    // the same sum/count avgdl division as build) — promote it to corpus
-    Storage.rewrite(spark.read.parquet(s"$indexPath/live_corpus"), s"$indexPath/corpus")
+    // the live totals are the exact post-delete integers (spec-pinned ==
+    // rebuild) — promote them to the corpus totals
+    val (n, t) = liveTotals(rec)
+    writeCorpus(spark, n, t, s"$indexPath/corpus")
     Storage.drop(s"$indexPath/live_corpus")
     Storage.drop(s"$indexPath/tombstones")
-    // the promoted corpus row's n_docs IS the surviving doc count (delete
-    // time subtracted exact integers; spec-pinned == rebuild) — a 1-row
-    // artifact read replaces the old full docs re-count job.
-    val n = spark.read.parquet(s"$indexPath/corpus").head().getAs[Long]("n_docs")
-    Storage.replace(Seq(n).toDF("n_docs"), manifestPath(indexPath))
+    Storage.commit(indexPath, Map("n_docs" -> n, "total_dl" -> t))
     true
   }
 
@@ -469,8 +439,7 @@ object TextIndex {
       spark: SparkSession, indexPath: String, terms: Seq[String],
       topK: Int = 20, k1: Double = 1.2, b: Double = 0.75
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val rec = Storage.committed(indexPath, "text index")
     // a tombstoned index must not serve deleted docs or stale df/avgdl —
     // dispatch to the tombstone-aware probe, which is bit-equal to a rebuild
     if (Storage.exists(s"$indexPath/tombstones"))
@@ -480,21 +449,10 @@ object TextIndex {
       .filter(col("tok").isin(terms: _*))
     val stats = spark.read.parquet(s"$indexPath/stats")
       .filter(col("tok").isin(terms: _*))
-    val docs   = spark.read.parquet(s"$indexPath/docs")
-    val corpus = spark.read.parquet(s"$indexPath/corpus")
-    val sq = floor(
-      log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))) *
-        1e6 + 0.5
-    ).cast("long")
     postings
       .join(broadcast(stats), "tok")
-      .join(docs, "doc_id")
-      .crossJoin(broadcast(corpus)) // one model row
-      .select(col("doc_id"), sq.as("sq"))
+      .join(spark.read.parquet(s"$indexPath/docs"), "doc_id")
+      .select(col("doc_id"), bm25Sq(rec("n_docs"), rec("total_dl"), k1, b).as("sq"))
       .groupBy(col("doc_id"))
       .agg(sum(col("sq")).as("score"))
       .orderBy(desc("score"), col("doc_id"))

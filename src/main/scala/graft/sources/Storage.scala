@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -42,14 +43,54 @@ object Storage {
 
   def exists(path: String): Boolean = Files.exists(Paths.get(path))
 
-  /** Remove an artifact table (recursive). Build-transaction use: a
-    * multi-table index build DROPS its commit manifest before touching any
-    * table and re-writes it LAST ([[graft.functions.AnnIndex.buildIvfPq]],
-    * [[graft.functions.TextIndex.build]]) — so a probe that requires the
-    * manifest refuses a torn index (crash between table writes) instead of
-    * serving mixed state.
-    */
+  /** Remove an artifact table or file (recursive). */
   def drop(path: String): Unit = deleteRecursively(Paths.get(path))
+
+  /** The commit record of a multi-table serving index ([[graft.functions
+    * .TextIndex]], [[graft.functions.AnnIndex]], [[graft.functions
+    * .SketchStore]]): one small `key=value` file at `<path>/manifest`. Its
+    * presence certifies that every artifact table under `path` is complete;
+    * its fields carry the index's integer model scalars (corpus totals,
+    * model dimensions, row counts), so verbs read them without a Spark job.
+    *
+    * Every index verb runs the same transaction: [[committed]] (refuse a
+    * torn or missing index and read its scalars) → [[invalidate]] → write
+    * the tables → [[commit]] LAST. A crash between the first and last step
+    * leaves no record, so every later verb refuses the index until a
+    * rebuild, instead of serving a mix of old and new tables.
+    */
+  def invalidate(path: String): Unit = drop(recordPath(path))
+
+  /** Write the commit record: the fields go to a temp sibling first, which
+    * is then renamed over `<path>/manifest` — the same rename discipline as
+    * [[merge]] and [[rewrite]], so a reader sees either no record or a
+    * complete one, and a crash before the rename leaves only the temp file,
+    * which [[committed]] never reads.
+    */
+  def commit(path: String, fields: Map[String, Long]): Unit = {
+    val record = Paths.get(recordPath(path))
+    val tmp    = Paths.get(recordPath(path) + ".__commit_tmp")
+    Files.createDirectories(record.getParent)
+    Files.write(tmp,
+      fields.toSeq.sorted.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes(UTF_8))
+    Files.move(tmp, record, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The fields of the commit record at `path`. Throws
+    * `IllegalArgumentException` when there is none — the index (`what`, for
+    * the message) is torn or was never built.
+    */
+  def committed(path: String, what: String): Map[String, Long] = {
+    val record = Paths.get(recordPath(path))
+    require(Files.isRegularFile(record),
+      s"$what at $path has no commit manifest — torn or missing build; rebuild it")
+    Files.readAllLines(record, UTF_8).asScala.map { line =>
+      val Array(k, v) = line.split("=", 2)
+      k -> v.toLong
+    }.toMap
+  }
+
+  private def recordPath(path: String) = path.stripSuffix("/") + "/manifest"
 
   /** `merge hydfsf` — compact append chunks into few files
     * (`mergeFile`, `core_process_utils.go:2040-2146`). Crash-safe swap: the

@@ -82,6 +82,27 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(Storage.get(spark, s"$path/codes").count() == embs.count())
   }
 
+  test("a torn index (no commit record) is refused by every verb") {
+    val path = freshPath("torn")
+    AnnIndex.buildIvfPq(embs, "vec_id", "embedding",
+      dim = 64, nCells = 8, m = 4, ksub = 8, iters = 2, indexPath = path)
+    AnnIndex.deleteVecs(spark, path, embs.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
+    Storage.drop(s"$path/manifest")
+    val verbs = Seq[(String, () => Any)](
+      "probe" -> (() => AnnIndex.probeIvfPq(spark, path, embs.filter(col("vec_id") < 4),
+        "vec_id", "embedding", nProbe = 2, k = 5)),
+      "append" -> (() => AnnIndex.appendIvfPq(spark, path,
+        embs.filter(col("vec_id") === 1), "vec_id", "embedding")),
+      "delete" -> (() => AnnIndex.deleteVecs(spark, path,
+        embs.filter(col("vec_id") === 2).select(col("vec_id")))),
+      "compact" -> (() => AnnIndex.compactIvfPq(spark, path)))
+    verbs.foreach { case (name, verb) =>
+      val e = intercept[IllegalArgumentException](verb())
+      assert(e.getMessage.contains("no commit manifest"), s"$name: ${e.getMessage}")
+    }
+    assert(Storage.exists(s"$path/tombstones"), "a refused verb must not touch state")
+  }
+
   test("tombstone delete: probe never returns deleted ids and deleted docs stop ranking") {
     val path = freshPath("delete")
     AnnIndex.buildIvfPq(embs, "vec_id", "embedding",

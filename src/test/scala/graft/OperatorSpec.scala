@@ -443,6 +443,20 @@ class OperatorSpec extends AnyFunSuite {
     assert(Storage.ls(path).count(_.endsWith(".parquet")) == 1)
   }
 
+  test("commit record: a stray temp sibling is never read as committed, commit leaves no temp") {
+    val path = Files.createTempDirectory("record").toString
+    // a crash after writing the temp sibling but before the rename
+    Files.write(java.nio.file.Paths.get(path, "manifest.__commit_tmp"), "n=1\n".getBytes("UTF-8"))
+    intercept[IllegalArgumentException](Storage.committed(path, "index"))
+    Storage.commit(path, Map("n" -> 2L, "k" -> 7L))
+    assert(Storage.committed(path, "index") == Map("n" -> 2L, "k" -> 7L))
+    assert(Storage.ls(path) == Seq("manifest"), "commit must leave only the record")
+    Storage.invalidate(path)
+    val e = intercept[IllegalArgumentException](Storage.committed(path, "index"))
+    assert(e.getMessage.contains("no commit manifest"))
+    assert(Storage.ls(path).isEmpty)
+  }
+
   test("x_mmr_diversify: picks are more spread than the plain top-k it re-ranks") {
     import org.apache.spark.sql.functions._
     def qvec(c: org.apache.spark.sql.Column) =

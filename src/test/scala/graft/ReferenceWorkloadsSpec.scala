@@ -5,17 +5,20 @@ import graft.operators.ReferenceWorkloads
 import scala.io.Source
 import scala.util.Try
 
-/** The reference's four benchmark workloads over its own fixture CSVs,
-  * checked against an independent plain-Scala oracle (the analog of the
-  * reference's batch verifier `misc/operator_lichess.go`). Also reports
-  * output-tuples/sec for comparison against BASELINE.md (reference: 87-145
-  * t/s; its own Spark Streaming comparison: 145-445 t/s).
+/** The reference's four benchmark workloads over fixture CSVs shaped like
+  * its own (`src/test/resources/reference/`, written by the seeded
+  * `tools/gen_reference_fixtures.py`), checked against an independent
+  * plain-Scala oracle (the analog of the reference's batch verifier
+  * `misc/operator_lichess.go`). Also reports output-tuples/sec for
+  * comparison against BASELINE.md (reference: 87-145 t/s; its own Spark
+  * Streaming comparison: 145-445 t/s).
   */
 class ReferenceWorkloadsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val lichessPath = "/root/reference/HYDFS/business/Lichess.txt"
-  private val parkingPath = "/root/reference/HYDFS/business/Parking_Meter_Spaces.txt"
+  private def fixture(name: String) = getClass.getResource(s"/reference/$name").getPath
+  private val lichessPath = fixture("lichess.txt")
+  private val parkingPath = fixture("parking_meters.txt")
 
   private def lines(p: String): Seq[Array[String]] = {
     // Parking fixture has non-UTF-8 bytes; all predicate/projection fields are
@@ -63,7 +66,7 @@ class ReferenceWorkloadsSpec extends AnyFunSuite {
     assert(got.sorted.toSeq == oracle.sorted)
   }
 
-  private val trafficPath = "/root/reference/HYDFS/business/Traffic_Signs_1000.txt"
+  private val trafficPath = fixture("traffic_signs.txt")
 
   /** Minimal RFC4180 parser for the in-test oracle (quote-aware, "" escape). */
   private def parseCsvLine(line: String): Array[String] = {

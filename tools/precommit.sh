@@ -1,8 +1,10 @@
 #!/bin/sh
 # Pre-commit gate for NEW/CHANGED oracles — the r10 verdict's ask after the
 # HUGEINT class shipped four times across two rounds. If any staged change
-# touches a file defining registry queries, require a fresh Verify dump +
-# type audit to have been run (and be clean) before the commit lands.
+# touches a file defining registry queries, or a module whose persisted
+# artifacts the serving oracles `read_parquet` (TextIndex, AnnIndex,
+# SketchStore, Storage), require a fresh Verify dump + type audit to have
+# been run (and be clean) before the commit lands.
 #
 # Install: ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # The gate is advisory-fast: it runs only the audit (DuckDB schema probe vs
@@ -11,14 +13,16 @@
 # then commit; the hook audits /tmp/precommit_out if query files changed.
 
 set -e
-QUERY_FILES=$(git diff --cached --name-only | grep -E 'src/main/scala/graft/queries/' || true)
+QUERY_FILES=$(git diff --cached --name-only | grep -E \
+  'src/main/scala/graft/(queries/|functions/(TextIndex|AnnIndex|SketchStore)\.scala|sources/Storage\.scala)' \
+  || true)
 [ -z "$QUERY_FILES" ] && exit 0
 
 OUT=${GRAFT_PRECOMMIT_OUT:-/tmp/precommit_out}
 SF=${GRAFT_PRECOMMIT_SF:-/root/testdata/sf0.01}
 
 if [ ! -f "$OUT/oracle_sql.json" ]; then
-  echo "pre-commit: query files changed ($QUERY_FILES) but no Verify dump at $OUT."
+  echo "pre-commit: query or serving-artifact files changed ($QUERY_FILES) but no Verify dump at $OUT."
   echo "Run: sbt -batch 'runMain graft.Verify $SF $OUT <changed-query-substr>'"
   echo "(or set GRAFT_PRECOMMIT_OUT to your dump dir; GRAFT_PRECOMMIT_SKIP=1 to bypass)"
   [ -n "$GRAFT_PRECOMMIT_SKIP" ] && exit 0
